@@ -75,7 +75,7 @@ def _read_with_jvm(spark, path):
 def test_avro_ocf_roundtrip_jvm_reader(spark, tmp_path):
     df = _sample_df(spark)
     path = str(tmp_path / "avro_out")
-    write_avro_distributed(df, path, URL_RESOURCE_AVRO_JSON)
+    assert write_avro_distributed(df, path, URL_RESOURCE_AVRO_JSON) == 137
 
     files = glob.glob(os.path.join(path, "part-*.avro"))
     assert 1 <= len(files) <= 4  # one per non-empty partition
@@ -107,6 +107,26 @@ def test_write_url_resource_avro_path(spark, tmp_path):
     if fmt == "avro-ocf":
         recs, _ = _read_with_jvm(spark, path)
         assert len(recs) == 23
+
+
+def test_write_url_resource_avro_propagates_job_failures(spark, tmp_path, monkeypatch):
+    """Only the connector-missing error selects the OCF fallback: a real
+    failure of the connector write must surface, not silently re-run the
+    whole pipeline through the OCF writer."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from warcraider_spark.plans.pipeline import write_url_resource
+    from warcraider_spark.sinks import avro_sink
+
+    def failing_save(self, *args, **kwargs):
+        raise RuntimeError("job failed")
+
+    fallback_calls = []
+    monkeypatch.setattr(DataFrameWriter, "save", failing_save)
+    monkeypatch.setattr(avro_sink, "write_avro_distributed", lambda *a: fallback_calls.append(a))
+    with pytest.raises(RuntimeError, match="job failed"):
+        write_url_resource(_sample_df(spark, n=3), str(tmp_path / "out"), fmt="avro")
+    assert fallback_calls == []
 
 
 def test_deterministic_bytes(spark, tmp_path):

@@ -11,6 +11,8 @@ from __future__ import annotations
 import gzip
 
 import pytest
+from hypothesis import example, given, settings
+from hypothesis import strategies as st
 
 from warcraider_spark.plans.pipeline import url_resource_from_warc_records, write_url_resource
 from warcraider_spark.schema import URL_RESOURCE_FIELDS
@@ -203,8 +205,20 @@ def test_observed_metrics(spark, warc_path):
     records = read_warc(spark, warc_path)
     metrics: dict = {}
     df = url_resource_from_warc_records(records, metrics=metrics)
-    n_out = df.count()
+    _assert_fixture_counters(metrics, df.count())
 
+
+def test_observed_metrics_after_avro_write(spark, warc_path, tmp_path):
+    """The Avro sink is a Dataset action too (the dependency-free OCF
+    writer runs through mapInArrow), so the same counters fill during
+    the write instead of Observation.get blocking forever."""
+    metrics: dict = {}
+    df = url_resource_from_warc_records(read_warc(spark, warc_path), metrics=metrics)
+    assert write_url_resource(df, str(tmp_path / "avro"), fmt="avro") in ("avro", "avro-ocf")
+    _assert_fixture_counters(metrics, 3)
+
+
+def _assert_fixture_counters(metrics: dict, n_out: int) -> None:
     m = {name: obs.get for name, obs in metrics.items()}
     assert m["input"]["n_records"] == 6
     assert m["responses"]["n_responses"] == 5  # request-type record dropped
@@ -352,3 +366,51 @@ def test_strict_attr_bytes_through_pipeline(spark, tmp_path_factory):
     # quick-xml dies on BOTH legs, html5ever's DOM getters decode
     assert u["html_errors"] != ""
     assert u["links"] == ["https://u.example.gov.au/p?a=1&b=2"]
+
+
+def test_blacklist_keeps_empty_and_unmatched_hostnames(spark, tmp_path):
+    """The native blacklist predicate drops only listed hosts/urls: a
+    record whose URL yields an empty regex hostname (no scheme, or no
+    WARC-Target-URI at all) and a host that merely contains a listed
+    host are kept, as the anti-join kept them; null keys match no rule."""
+    from pyspark.sql import functions as F
+
+    from warcraider_spark.functions import extract as X
+
+    page = _http(b"<html><body><p>kept</p></body></html>")
+    headers = {"WARC-Type": "response", "Uncompressed-Content-Length": str(len(page))}
+    records = [
+        ({**headers, "WARC-Target-URI": "no-scheme/page"}, page),
+        (headers, page),
+        ({**headers, "WARC-Target-URI": "https://www.data.gov.au.example.org/x"}, page),
+        ({**headers, "WARC-Target-URI": "https://data.gov.au/x"}, page),
+    ]
+    (tmp_path / "bl-000.warc").write_bytes(build_warc_bytes(records))
+    rows = url_resource_from_warc_records(read_warc(spark, str(tmp_path))).collect()
+    assert sorted(r["url"] for r in rows) == ["", "https://www.data.gov.au.example.org/x", "no-scheme/page"]
+
+    keys = spark.createDataFrame(
+        [(None, None), (None, "https://x.example/"), ("x.example", None), ("data.gov.au", None)],
+        "host string, url string",
+    )
+    got = [r.b for r in keys.select(X.on_blacklist(F.col("host"), F.col("url")).alias("b")).collect()]
+    assert got == [False, False, False, True]
+
+
+_BODY_PIECES = st.sampled_from(["\n\r\n", "\n\r\n\r\n", "\n", "\r", "\r\n", " ", "a", "\u00e9", "<p>"])
+
+
+@settings(max_examples=25, deadline=None)
+@given(st.lists(st.lists(_BODY_PIECES, max_size=12).map("".join), min_size=1, max_size=20))
+@example(["", "\n\r\n", "\n\r\nbody", "head\n\r\n", "\n\r\n\n\r\n", "h\n\r\n\n\r\nb\n\r\n"])
+def test_crossing_body_split_matches_native(spark, contents):
+    """The decompress+parse crossing splits the HTTP body in Python; it
+    must equal the native X.http_body the regex fallback and GA columns
+    read, including leading/trailing separators and \\n\\r\\n runs."""
+    from pyspark.sql import functions as F
+
+    from warcraider_spark.functions import extract as X
+
+    df = spark.createDataFrame(list(enumerate(contents)), "i int, c string")
+    native = [r.b for r in df.orderBy("i").select(X.http_body(F.col("c")).alias("b")).collect()]
+    assert native == [X.http_body_py(c) for c in contents]

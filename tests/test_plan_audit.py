@@ -12,6 +12,7 @@ from __future__ import annotations
 from tests.conftest import SF_CORRECT
 from tools.plan_audit import (
     _broadcast_unbounded_aggs,
+    _udf_double_eval,
     _unpartitioned_windows,
     audit,
     flags_for,
@@ -58,6 +59,30 @@ def test_unpartitioned_window_detector():
     part = "Window [row_number() windowspecdefinition(shard#1L, h#2L ASC NULLS FIRST, frame) AS rn]"
     assert _unpartitioned_windows(unpart) == 1
     assert _unpartitioned_windows(part) == 0
+
+
+def test_udf_double_eval_detector():
+    """A Python UDF call (same name#resultId) in two eval nodes flags —
+    the shape a null filter pushed below its UDF projection produces.
+    Two calls of one UDF on different inputs in ONE node do not, nor does
+    a regex literal in the arguments."""
+    doubled = (
+        "(5) ArrowEvalPython\n"
+        "Input [2]: [content#10, url#11]\n"
+        "Arguments: [_gunzip(content#10)#17], [pythonUDF0#67], 200\n\n"
+        "(18) ArrowEvalPython\n"
+        "Input [2]: [content#10, host#12]\n"
+        "Arguments: [_gunzip(content#10)#17, _root(host#12)#56], [pythonUDF0#68, pythonUDF1#69], 200\n"
+    )
+    assert _udf_double_eval(doubled) == 1
+    single = (
+        "(22) ArrowEvalPython\n"
+        "Input [3]: [url#11, a#1, b#2]\n"
+        "Arguments: [_abs(url#11, regexp_extract_all(a#1, (?sU)href=[\"'](.*?)[\"'], 1))#52, "
+        "_abs(url#11, b#2)#53], [pythonUDF0#71, pythonUDF1#72], 200\n"
+    )
+    assert _udf_double_eval(single) == 0
+    assert _udf_double_eval(single + "\n" + single) == 2
 
 
 def test_broadcast_unbounded_agg_detector():

@@ -774,10 +774,13 @@ def test_mixture_trio_plan_shapes(spark):
 def test_warc_pipeline_is_map_only_until_write(spark, tmp_path):
     """The e2e WARC pipeline's r10 scale curve attributes ~97% of
     executor time to the map stage — because the transform graph is
-    shuffle-FREE by construction: native pre-filters, four pandas-UDF
+    shuffle-FREE by construction: native pre-filters, the Python
     crossings and all projections compose into one map stage, and the
     only exchange in the whole job is the repartition("source") the
-    WRITE adds. Pin both halves of that claim."""
+    WRITE adds. Pin both halves of that claim, and the pass shape: no
+    join (the blacklist is a native predicate), three Python eval nodes
+    (the record splitter, decompress+parse, URLs+RAKE), each UDF in
+    exactly one of them, and one Spark job per pass."""
     from warcraider_spark.plans.pipeline import url_resource_from_warc_records
     from warcraider_spark.sources.warc import build_warc_bytes, read_warc_auto
 
@@ -805,6 +808,24 @@ def test_warc_pipeline_is_map_only_until_write(spark, tmp_path):
     wplan = plan_of(written)
     wshuffles = wplan.count("+- Exchange") + wplan.count(":- Exchange")
     assert wshuffles == 1, f"write path must add exactly one exchange, found {wshuffles}"
+
+    import re
+
+    from tools.plan_audit import python_udf_evals
+
+    assert "Join" not in plan, f"the transform graph must not join:\n{plan[:2000]}"
+    eval_nodes = re.findall(r"^\(\d+\) (\w*(?:EvalPython|MapIn)\w*)$", plan, re.M)
+    assert sorted(eval_nodes) == ["ArrowEvalPython", "ArrowEvalPython", "MapInPandas"], eval_nodes
+    names_per_node = [{c.split("#")[0] for c in calls} for calls in python_udf_evals(plan)]
+    names = [n for node in names_per_node for n in node]
+    assert sorted(names) == sorted(set(names)), f"a UDF is evaluated in two nodes: {names_per_node}"
+    assert {"_decode_parse", "_abs", "_root", "_rake"} <= set(names), names_per_node
+
+    sc = spark.sparkContext
+    before = sc._jsc.sc().dagScheduler().nextJobId()
+    res.write.format("noop").mode("overwrite").save()
+    jobs = sc._jsc.sc().dagScheduler().nextJobId() - before
+    assert jobs == 1, f"a pipeline pass must be one Spark job, ran {jobs}"
 
 
 def test_mixture_pipeline_runtime_stage_reuse(spark):

@@ -8,6 +8,8 @@ For every registered query, builds the DataFrame at sf0.01 and reads its
 - join strategies (BHJ / SMJ / SHJ / BNLJ / CartesianProduct)
 - unpartitioned window specs (single-reducer risk)
 - parquet scans with non-empty PushedFilters
+- global sorts whose range sampling re-runs their input (sort2x)
+- Python UDFs evaluated in more than one eval node (udf2x)
 
 and writes PLAN_AUDIT.md: a per-query table plus a flagged section for
 the shapes that need justification at 100 TB (cartesians, nested-loop
@@ -24,6 +26,7 @@ from __future__ import annotations
 import os
 import re
 import sys
+from collections import Counter
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -329,6 +332,41 @@ def _sort_double_eval(plan: str) -> int:
     return flagged
 
 
+_EVAL_PYTHON_ARGS = re.compile(
+    r"^\(\d+\) (?:Arrow|Batch)EvalPython\n(?:.*\n)*?Arguments: \[(.*)$", re.M
+)
+# a Python UDF call in an eval node's argument list prints as
+# name(args)#resultId; nothing else there ends in ")#<id>"
+_UDF_CALL_END = re.compile(r"\)#(\d+)(?=, |\])")
+
+
+def python_udf_evals(plan: str) -> list[set[str]]:
+    """Per Python eval node (ArrowEvalPython / BatchEvalPython) of a
+    formatted plan, the set of UDF calls it evaluates, each keyed
+    ``name#resultId``."""
+    nodes = []
+    for m in _EVAL_PYTHON_ARGS.finditer(plan):
+        args, start, calls = m.group(1), 0, set()
+        for end in _UDF_CALL_END.finditer(args):
+            calls.add(f"{args[start:args.index('(', start)]}#{end.group(1)}")
+            if args[end.end()] == "]":
+                break
+            start = end.end() + 2
+        nodes.append(calls)
+    return nodes
+
+
+def _udf_double_eval(plan: str) -> int:
+    """Count Python UDF calls evaluated in more than one eval node. The
+    same call (same resultId) in two nodes runs its Python worker round
+    trip twice per row; the usual cause is a filter on the UDF's result
+    that Catalyst pushed below the projection computing it, so the filter
+    re-evaluates the UDF (mark the UDF nondeterministic to pin it to one
+    node). A call that two branches of a plan both compute counts too."""
+    seen = Counter(c for calls in python_udf_evals(plan) for c in calls)
+    return sum(n > 1 for n in seen.values())
+
+
 def _unpartitioned_windows(plan: str) -> int:
     n = 0
     for m in re.finditer(r"windowspecdefinition\(([^)]*)\)", plan):
@@ -357,6 +395,7 @@ def analyze_plan(name: str, plan: str) -> dict:
         "cartesian": plan.count("CartesianProduct"),
         "unpart_win": _unpartitioned_windows(plan),
         "sort2x": _sort_double_eval(plan),
+        "udf2x": _udf_double_eval(plan),
         "pushed": int(bool(re.search(r"PushedFilters: \[[^\]]", plan))),
     }
 
@@ -376,6 +415,8 @@ def flags_for(row: dict) -> list[str]:
         out.append("broadcast of unbounded aggregate")
     if row.get("sort2x"):
         out.append("double-eval global sort")
+    if row.get("udf2x"):
+        out.append("double-eval Python UDF")
     return [f for f in out if (row["query"], f) not in KNOWN_OK_PAIRS]
 
 
@@ -409,23 +450,24 @@ def render(rows: list[dict], sf_dir: str) -> str:
         "",
         f"Generated by tools/plan_audit.py over {len(rows)} registry queries "
         f"at `{sf_dir}`. Columns: shuffle Exchanges, BroadcastExchanges, join",
-        "strategies, unpartitioned window specs, and whether any parquet scan",
-        "carries pushed filters. Flags call out shapes that are scale risks",
+        "strategies, unpartitioned window specs, global sorts and Python UDFs",
+        "evaluated twice, and whether any parquet scan carries pushed filters.",
+        "Flags call out shapes that are scale risks",
         "UNLESS the query's docstring documents why the input is bounded",
         "(1-row totals, bucket summaries, local-skyline survivors …) — the",
         "known-OK list in the tool mirrors those docstrings.",
         "",
-        "| query | xchg | bcast | BHJ | SMJ | SHJ | BNLJ | cart | unpart-win | bc-agg | sort2x | pushed |",
-        "|---|---|---|---|---|---|---|---|---|---|---|---|",
+        "| query | xchg | bcast | BHJ | SMJ | SHJ | BNLJ | cart | unpart-win | bc-agg | sort2x | udf2x | pushed |",
+        "|---|---|---|---|---|---|---|---|---|---|---|---|---|",
     ]
     flagged = []
     for r in rows:
         if "error" in r:
-            out.append(f"| {r['query']} | PLAN ERROR: {r['error']} |" + " |" * 10)
+            out.append(f"| {r['query']} | PLAN ERROR: {r['error']} |" + " |" * 11)
         else:
             out.append(
                 "| {query} | {exchange} | {bcast} | {bhj} | {smj} | {shj} | {bnlj} "
-                "| {cartesian} | {unpart_win} | {bcast_agg} | {sort2x} | {pushed} |".format(**r)
+                "| {cartesian} | {unpart_win} | {bcast_agg} | {sort2x} | {udf2x} | {pushed} |".format(**r)
             )
         flagged.extend((r["query"], why) for why in flags_for(r))
     out.append("")

@@ -27,6 +27,7 @@ __all__ = [
     "ga_config",
     "http_header_block",
     "http_body",
+    "http_body_py",
     "parse_http_headers",
     "load_time",
     "hostname_with_override",
@@ -112,6 +113,11 @@ def http_body(content: Column | str) -> Column:
     c = F.col(content) if isinstance(content, str) else content
     parts = F.split(c, r"\n\r\n")
     return F.array_join(F.slice(parts, 2, F.greatest(F.size(parts) - 1, F.lit(0))), " ")
+
+
+def http_body_py(content: str) -> str:
+    """``http_body`` for one decoded record, inside a Python crossing."""
+    return " ".join(content.split("\n\r\n")[1:])
 
 
 def parse_http_headers(header_block: Column) -> Column:
@@ -267,10 +273,10 @@ URL_SUBSTRING_BLACKLIST: tuple[str, ...] = (
 def on_blacklist(hostname: Column, url: Column) -> Column:
     """True when the record must be dropped (blacklist.rs:52-57).
 
-    Expressed as literal isin/contains — for a *large* dynamic blacklist the
-    scale form is a broadcast left-anti join against a blacklist DataFrame
-    (see plans.pipeline.apply_blacklist)."""
+    Literal isin/contains, so the pipeline applies it as a native filter
+    before any Python crossing. Null-safe: a null hostname or url matches
+    no rule (False), so the record is kept."""
     cond = hostname.isin(*HOSTNAME_BLACKLIST) | url.isin(*URL_BLACKLIST)
     for sub in URL_SUBSTRING_BLACKLIST:
         cond = cond | url.contains(sub)
-    return cond
+    return F.coalesce(cond, F.lit(False))

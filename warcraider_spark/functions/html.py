@@ -85,9 +85,6 @@ import bisect
 import re
 from html.parser import HTMLParser
 
-import pandas as pd
-
-from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
     BooleanType,
@@ -100,7 +97,6 @@ from pyspark.sql.types import (
 __all__ = [
     "HTML_RESULT_SCHEMA",
     "parse_html_py",
-    "parse_html_udf",
     "empty_html_result",
     "tidy_diagnostics",
     "strict_parse_ok",
@@ -2338,21 +2334,3 @@ def parse_html_py(raw_html: str) -> dict:
         "resource_urls": parser.resources,
         "meta_tags": parser.meta,
     }
-
-
-def parse_html_udf() -> F.Column:
-    """Arrow-batched pandas UDF: raw_html string → HTMLResult struct.
-
-    One UDF call per row; the pipeline projects all derived columns from a
-    SINGLE invocation (SURVEY §4: never duplicate a Python UDF expression —
-    Catalyst may re-execute it)."""
-    from warcraider_spark.dist import ensure_package_on_executors
-    ensure_package_on_executors()
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf(HTML_RESULT_SCHEMA)
-    def _parse(html: pd.Series) -> pd.DataFrame:
-        rows = [parse_html_py(h or "") for h in html]
-        return pd.DataFrame(rows)
-
-    return _parse

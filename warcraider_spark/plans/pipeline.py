@@ -1,18 +1,23 @@
 """The WARC → url_resource pipeline (SURVEY §0 dataflow, §3.1 lifecycle).
 
 One lazy DataFrame graph replacing the reference's hardcoded Rust loop
-(/root/reference/src/main.rs:169-515). Plan-construction discipline
-(SURVEY §4):
+(the reference's src/main.rs:169-515). A pass is ONE map-only Spark job
+with three Python crossings per task: the record splitter
+(``sources.warc``), decompress+parse, and URLs+RAKE. Plan-construction
+discipline (SURVEY §4):
 
 - cheap native predicates (WARC-type, version sentinel, blacklist) run
-  BEFORE any Python UDF — Catalyst will not hoist filters above a UDF;
-- each pandas UDF is invoked ONCE and projected via its struct fields —
-  duplicated UDF expressions may be re-executed;
-- the 2 MB oversize guard feeds the parse UDF an empty string instead of
-  wrapping it in when/otherwise (the UDF column would be evaluated for all
-  rows anyway; an empty input makes the skip actually cheap);
-- the four Python crossings (decompress, parse, absolutize+domain, RAKE)
-  are Arrow-batched pandas UDFs; everything else is native.
+  BEFORE any Python UDF — Catalyst will not hoist filters above a UDF.
+  The blacklist is a literal isin/contains predicate, not a join against
+  side tables (those cost a Python job and a broadcast on every pass);
+- each pandas UDF is invoked ONCE and projected via its struct fields.
+  The decompress+parse UDF is marked nondeterministic so Catalyst cannot
+  push the bad-gzip null filter below its projection, which would run the
+  crossing a second time for the filter;
+- the decompress+parse crossing applies the 2 MB oversize guard itself:
+  an oversize record is decoded but parsed as "" (the native regex
+  fallback then fills its columns);
+- everything else is native.
 
 Assembly-order quirks preserved from main.rs:274-492:
 - blacklist checks the REGEX hostname (pre X-Funnelback-AA-Domain
@@ -29,59 +34,57 @@ Assembly-order quirks preserved from main.rs:274-492:
 from __future__ import annotations
 
 import gzip
+import zlib
 
 import pandas as pd
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import StringType
+from pyspark.sql.types import StringType, StructField, StructType
 
 from warcraider_spark.functions import extract as X
-from warcraider_spark.functions.html import parse_html_udf
+from warcraider_spark.functions.html import HTML_RESULT_SCHEMA, parse_html_py
 from warcraider_spark.functions.rake import rake_keywords_udf
 from warcraider_spark.functions.textfn import word_count as _word_count
 from warcraider_spark.functions.urls import absolutize_udf, root_domain_udf
 from warcraider_spark.schema import URL_RESOURCE_AVRO_JSON, URL_RESOURCE_FIELDS
 
-__all__ = ["url_resource_from_warc_records", "apply_blacklist", "write_url_resource"]
+__all__ = ["url_resource_from_warc_records", "write_url_resource"]
 
 OVERSIZE_BYTES = 2_000_000
+# the error condition of format("avro") when spark-avro is not on the classpath
+AVRO_CONNECTOR_MISSING = "_LEGACY_ERROR_TEMP_1139"
 
 
-def _decompress_udf() -> Column:
-    """gzip member → lossy-UTF8 string; None (row later dropped) on bad
-    gzip — main.rs:287-303 semantics including String::from_utf8_lossy."""
+def _decode_parse_udf() -> Column:
+    """(gzip member, Uncompressed-Content-Length) → struct<content_str, html>.
+
+    content_str is the lossy-UTF8 text, None on bad gzip (the row is later
+    dropped) — main.rs:287-303 semantics including String::from_utf8_lossy.
+    html is ``parse_html_py`` of the HTTP body, or of "" when the record is
+    oversize by either its declared or its decoded length."""
     from warcraider_spark.dist import ensure_package_on_executors
     ensure_package_on_executors()
     from pyspark.sql.functions import pandas_udf
 
-    @pandas_udf(StringType())
-    def _gunzip(blobs: pd.Series) -> pd.Series:
-        def one(b: bytes | None) -> str | None:
-            if b is None:
-                return None
-            try:
-                return gzip.decompress(bytes(b)).decode("utf-8", errors="replace")
-            except Exception:
-                return None
+    schema = StructType(
+        [StructField("content_str", StringType()), StructField("html", HTML_RESULT_SCHEMA)]
+    )
 
-        return blobs.map(one)
+    def one(blob: bytes | None, size_bytes: int) -> dict:
+        try:
+            text = gzip.decompress(blob).decode("utf-8", errors="replace")
+        except (TypeError, OSError, EOFError, zlib.error):  # null or bad gzip
+            return {"content_str": None, "html": None}
+        oversize = size_bytes > OVERSIZE_BYTES or len(text) > OVERSIZE_BYTES
+        return {"content_str": text, "html": parse_html_py("" if oversize else X.http_body_py(text))}
 
-    return _gunzip
+    @pandas_udf(schema)
+    def _decode_parse(blobs: pd.Series, sizes: pd.Series) -> pd.DataFrame:
+        return pd.DataFrame([one(b, s) for b, s in zip(blobs, sizes)], columns=schema.names)
 
-
-def apply_blacklist(records: DataFrame, hostname_col: str, url_col: str) -> DataFrame:
-    """Blacklist as a broadcast LEFT-ANTI join — the scale form of
-    blacklist.rs:52-57 (substring rules stay as native predicates)."""
-    spark = records.sparkSession
-    hosts = spark.createDataFrame([(h,) for h in X.HOSTNAME_BLACKLIST], ["bad_host"])
-    urls = spark.createDataFrame([(u,) for u in X.URL_BLACKLIST], ["bad_url"])
-    out = records.join(
-        F.broadcast(hosts), records[hostname_col] == hosts.bad_host, "left_anti"
-    ).join(F.broadcast(urls), records[url_col] == urls.bad_url, "left_anti")
-    for sub in X.URL_SUBSTRING_BLACKLIST:
-        out = out.filter(~F.col(url_col).contains(sub))
-    return out
+    return _decode_parse.asNondeterministic()
 
 
 def url_resource_from_warc_records(records: DataFrame, metrics: dict | None = None) -> DataFrame:
@@ -118,40 +121,33 @@ def url_resource_from_warc_records(records: DataFrame, metrics: dict | None = No
         .withColumn("source", F.element_at(F.split("warc_file", "/"), -1))
     )
     base = _observe(base, "responses", F.count(F.lit(1)).alias("n_responses"))
-    filtered = apply_blacklist(base, "regex_hostname", "url")
+    filtered = base.filter(~X.on_blacklist(F.col("regex_hostname"), F.col("url")))
     filtered = _observe(filtered, "post_blacklist", F.count(F.lit(1)).alias("n_kept"))
 
-    # --- UDF crossing 1: gzip decompress (bad rows dropped) ---------------
-    gunzip = _decompress_udf()
-    decompressed = (
-        filtered.withColumn("content_str", gunzip(F.col("content")))
-        .filter(F.col("content_str").isNotNull())
-        .drop("content")
+    # --- UDF crossing: gzip decompress + HTML parse (bad gzip dropped) ----
+    decode_parse = _decode_parse_udf()
+    decoded = (
+        filtered.withColumn("_decoded", decode_parse(F.col("content"), F.col("size_bytes")))
+        .filter(F.col("_decoded.content_str").isNotNull())
+        .select("*", "_decoded.*")
+        .drop("content", "_decoded")
     )
-    decompressed = _observe(
-        decompressed, "decompressed", F.count(F.lit(1)).alias("n_ok_gzip")
-    )
+    decoded = _observe(decoded, "decompressed", F.count(F.lit(1)).alias("n_ok_gzip"))
 
     # --- native HTTP split + header map + scalars -------------------------
-    with_http = (
-        decompressed.withColumn("http_headers", X.parse_http_headers(X.http_header_block(F.col("content_str"))))
+    parsed = (
+        decoded.withColumn("http_headers", X.parse_http_headers(X.http_header_block(F.col("content_str"))))
         .withColumn("raw_html", X.http_body(F.col("content_str")))
         .withColumn("load_time", X.load_time(F.col("http_headers")))
         .withColumn("hostname", X.hostname_with_override(F.col("http_headers"), F.col("regex_hostname")))
         .withColumn("google_analytics", X.ga_ids("raw_html"))
         .withColumn("google_analytics_config", X.ga_config("raw_html"))
-    )
-
-    # --- UDF crossing 2: HTML parse (single struct call) ------------------
-    parse = parse_html_udf()
-    oversize = (F.col("size_bytes") > OVERSIZE_BYTES) | (F.length("content_str") > OVERSIZE_BYTES)
-    parsed = (
-        with_http.withColumn(
-            "html", parse(F.when(oversize, F.lit("")).otherwise(F.col("raw_html")))
+        # the same guard the crossing applied, for the observation below;
+        # shaped's explicit select discards it again
+        .withColumn(
+            "_oversize",
+            (F.col("size_bytes") > OVERSIZE_BYTES) | (F.length("content_str") > OVERSIZE_BYTES),
         )
-        # materialized before content_str is dropped; the observation below
-        # needs it, and shaped's explicit select discards it again
-        .withColumn("_oversize", oversize)
         .drop("content_str")
     )
 
@@ -191,19 +187,15 @@ def url_resource_from_warc_records(records: DataFrame, metrics: dict | None = No
         raw_resources.alias("raw_resources"),
     )
 
-    # --- UDF crossing 3: absolutize + root domain -------------------------
+    # --- UDF crossing: absolutize + root domain + RAKE (one eval node) ----
     absolutize = absolutize_udf()
     root = root_domain_udf()
-    with_urls = (
+    rake = rake_keywords_udf()
+    final = (
         shaped.withColumn("links", absolutize(F.col("url"), F.col("raw_links")))
         .withColumn("resource_urls", absolutize(F.col("url"), F.col("raw_resources")))
         .withColumn("domain_name", root(F.col("regex_hostname")))
-    )
-
-    # --- UDF crossing 4: RAKE + native word_count -------------------------
-    rake = rake_keywords_udf()
-    final = (
-        with_urls.withColumn("keywords", rake(F.col("text_content")))
+        .withColumn("keywords", rake(F.col("text_content")))
         .withColumn("word_count", _word_count("text_content"))
         .select(*URL_RESOURCE_FIELDS)
     )
@@ -218,7 +210,8 @@ def write_url_resource(df: DataFrame, path: str, fmt: str = "parquet") -> str:
       dependency-free OCF writer in ``sinks.avro_sink`` (same schema, same
       container-file layout, one file per partition) — either way the
       output IS Avro, verified by the JVM avro reader in
-      tests/test_avro_sink.py;
+      tests/test_avro_sink.py. Only the connector-missing error falls
+      back; any other failure of the connector write propagates;
     - ``parquet``: the query-layer layout replacing BigQuery
       (load.bat:5-9): partitioned by source WARC, sorted within partitions
       by domain_name so min/max row-group stats give BigQuery-cluster-like
@@ -233,11 +226,13 @@ def write_url_resource(df: DataFrame, path: str, fmt: str = "parquet") -> str:
                 .save(path)
             )
             return "avro"
-        except Exception:
-            from warcraider_spark.sinks.avro_sink import write_avro_distributed
+        except AnalysisException as exc:
+            if exc.getCondition() != AVRO_CONNECTOR_MISSING:
+                raise
+        from warcraider_spark.sinks.avro_sink import write_avro_distributed
 
-            write_avro_distributed(df, path, URL_RESOURCE_AVRO_JSON)
-            return "avro-ocf"
+        write_avro_distributed(df, path, URL_RESOURCE_AVRO_JSON)
+        return "avro-ocf"
     (
         df.repartition("source")
         .sortWithinPartitions("domain_name")

@@ -15,13 +15,15 @@ implements the Avro 1.x **binary encoding + Object Container File** layout
   ``avro.codec: null``), 16-byte sync marker, then
   ``(record count, byte size, records..., sync)`` blocks.
 
-The write is DISTRIBUTED: ``foreachPartition`` serializes each partition
-in its task and writes ``part-{pid:05d}.avro`` — the same
-one-file-per-task layout every Spark file sink uses, so at 100 TB each of
-the N shuffle partitions streams its records straight to its own object
-(no driver collect, no single-writer bottleneck). Records are encoded
-incrementally in bounded blocks (BLOCK_RECORDS), so task memory is
-O(block), not O(partition).
+The write is DISTRIBUTED: a ``mapInArrow`` task serializes its partition
+and writes ``part-{pid:05d}.avro`` — the same one-file-per-task layout
+every Spark file sink uses, so at 100 TB each of the N shuffle partitions
+streams its records straight to its own object (no driver collect, no
+single-writer bottleneck). Each task yields only its file's record count,
+which the driver collects, so the write is a Dataset action: observations
+attached to the written DataFrame fire, as with any built-in sink.
+Records are converted from Arrow and encoded in slices of BLOCK_RECORDS,
+so task memory is O(Arrow batch + block), not O(partition).
 
 Verification path: tests read the files back with the JVM's own
 ``org.apache.avro`` GenericDatumReader (avro-1.12.1.jar ships with Spark)
@@ -30,7 +32,9 @@ via py4j — an independent reference decoder, not this encoder reversed.
 
 from __future__ import annotations
 
+import hashlib
 import io
+import itertools
 import json
 import os
 import struct
@@ -96,7 +100,8 @@ def _encode_array(out: io.BytesIO, items, enc_item) -> None:
 
 
 def _encode_map(out: io.BytesIO, m, enc_value) -> None:
-    m = m or {}
+    # a dict, or the (key, value) pair list Arrow's to_pylist gives a map
+    m = dict(m or {})
     if m:
         encode_long(out, len(m))
         # deterministic key order so output files are byte-reproducible
@@ -190,8 +195,17 @@ def write_ocf(path: str, schema_json: str, rows: Iterable, sync: bytes) -> int:
     return n_total
 
 
-def write_avro_distributed(df: DataFrame, path: str, schema_json: str) -> None:
-    """One .avro object per partition, written inside each task.
+def _arrow_rows(first, batches: Iterator) -> Iterator[dict]:
+    """Records of ``first`` and the remaining Arrow batches, converted to
+    Python one BLOCK_RECORDS slice at a time."""
+    for batch in itertools.chain((first,), batches):
+        for start in range(0, batch.num_rows, BLOCK_RECORDS):
+            yield from batch.slice(start, BLOCK_RECORDS).to_pylist()
+
+
+def write_avro_distributed(df: DataFrame, path: str, schema_json: str) -> int:
+    """One .avro object per partition, written inside each task; returns
+    the number of records written.
 
     ``path`` must be a directory visible to the executors (local FS here;
     an object-store mount on a cluster — same contract as every Spark file
@@ -204,23 +218,18 @@ def write_avro_distributed(df: DataFrame, path: str, schema_json: str) -> None:
     ensure_package_on_executors()
     os.makedirs(path, exist_ok=True)
 
-    def write_partition(it: Iterator) -> None:
-        import hashlib
-
+    def write_partition(batches: Iterator) -> Iterator:
+        import pyarrow as pa
         from pyspark import TaskContext
 
-        pid = TaskContext.get().partitionId()
-        first = next(it, None)
+        first = next((b for b in batches if b.num_rows), None)
         if first is None:
             return
-        import itertools
-
+        pid = TaskContext.get().partitionId()
+        name = f"part-{pid:05d}.avro"
         sync = hashlib.md5(f"{schema_json}|{pid}".encode()).digest()
-        write_ocf(
-            os.path.join(path, f"part-{pid:05d}.avro"),
-            schema_json,
-            itertools.chain((first,), it),
-            sync,
-        )
+        n = write_ocf(os.path.join(path, name), schema_json, _arrow_rows(first, batches), sync)
+        yield pa.RecordBatch.from_pydict({"file": [name], "records": [n]})
 
-    df.foreachPartition(write_partition)
+    written = df.mapInArrow(write_partition, "file string, records long").collect()
+    return sum(r.records for r in written)
